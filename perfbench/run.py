@@ -29,52 +29,16 @@ import sys  # noqa: E402
 import traceback  # noqa: E402
 
 ROOT = os.getcwd()
-SETUP_SAMPLES = 3
+SEED_SAMPLES = 2        # seed calls per run (a crawl's own seed counts)
+HEAVY_SHARE = 0.9       # heavy rounds fetch >= this share of the largest
 
-E2E_UNITS = {
-    "crawl_s": "s", "crawl_urls_per_s": "1/s", "peak_round_urls_per_s": "1/s",
-    "round_s_p50": "s", "round_s_p90": "s", "setup_s": "s", "seed_s": "s",
-    "peak_rss_mb": "MB",
-}
-LAYER_UNITS = {
-    "crawler.spark_jobs_per_round": "count",
-    "crawler.spark_stages_per_round": "count",
-    "crawler.spark_tasks_per_round": "count",
-    "crawler.tasks_failed": "count",
-    "crawler.fixed_s": "s",
-    "crawler.us_per_url": "us",
-    "crawler.dedup_ratio": "ratio",
-    "crawler.admit_ratio": "ratio",
-    "crawler.backlog_max": "count",
-    "crawler.rounds": "count",
-    "crawler.robots_denied": "count",
-    "crawler.budget_denied": "count",
-    "crawler.depth_pruned": "count",
-    "statestore.write_table_s": "s",
-    "statestore.write_table_calls": "count",
-    "statestore.write_pandas_s": "s",
-    "statestore.commit_s": "s",
-    "statestore.bytes_per_round": "B",
-    "statestore.files_per_round": "count",
-    "statestore.resume_s": "s",
-    "spark.task_s": "s",
-    "spark.core_busy_share": "ratio",
-    "spark.shuffle_read_bytes": "B",
-    "spark.shuffle_write_bytes": "B",
-    "spark.spill_bytes": "B",
-    "spark.input_bytes": "B",
-    "spark.gc_s": "s",
-    "extract.arrow_pages_per_s": "1/s",
-    "extract.pandas_pages_per_s": "1/s",
-    "extract.text_us_per_page": "us",
-    "extract.links_us_per_page": "us",
-    "extract.md5_us_per_page": "us",
-    "urlnorm.us_per_link": "us",
-    "robots.us_per_url": "us",
-    "simulator.crawl_s": "s",
-    "simulator.engine_speedup": "ratio",
-    "trace.crawl_s": "s",
-}
+
+def declared_units() -> tuple[dict, dict]:
+    """Metric name -> unit, end-to-end and per-layer, from BENCHMARK.json."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    return ({m["name"]: m["unit"] for m in bench["end_to_end"]},
+            {m["name"]: m["unit"] for m in bench["per_layer"]})
 
 
 def parse_args(argv):
@@ -241,29 +205,32 @@ def regime_record(wl, inp, crawls) -> dict:
     return out
 
 
-def e2e_metrics(crawls, rounds, setup_samples, rss_mb) -> tuple[dict, dict]:
+def heavy_rounds(rounds) -> list:
+    """Rounds fetching at least HEAVY_SHARE of the run's largest round."""
+    top = max(r.fetched for r in rounds)
+    return [r for r in rounds if r.fetched >= HEAVY_SHARE * top]
+
+
+def e2e_metrics(crawls, rounds, setup_s, seed_s, rss_mb
+                ) -> tuple[dict, dict]:
     crawl_s = [c.crawl_s for c in crawls]
     urls_per_s = [c.urls / c.crawl_s for c in crawls]
-    peak = []
-    for c in crawls:
-        top = max(c.rounds, key=lambda r: r.fetched + r.links)
-        peak.append((top.fetched + top.links) / top.wall_s)
+    peak = [(r.fetched + r.links) / r.wall_s for r in heavy_rounds(rounds)]
     walls = [r.wall_s for r in rounds]
-    seed_s = [c.seed_s for c in crawls]
     metrics = {
         "crawl_s": statistics.median(crawl_s),
         "crawl_urls_per_s": statistics.median(urls_per_s),
         "peak_round_urls_per_s": statistics.median(peak),
         "round_s_p50": percentile(walls, 50),
         "round_s_p90": percentile(walls, 90),
-        "setup_s": statistics.median(setup_samples),
+        "setup_s": setup_s,
         "seed_s": statistics.median(seed_s),
         "peak_rss_mb": rss_mb,
     }
     detail = {
         "crawl_s": summary(crawl_s), "crawl_urls_per_s": summary(urls_per_s),
         "peak_round_urls_per_s": summary(peak), "round_s": summary(walls),
-        "setup_s": summary(setup_samples), "seed_s": summary(seed_s),
+        "seed_s": summary(seed_s),
     }
     return metrics, detail
 
@@ -282,7 +249,10 @@ def layer_metrics(tracer, stages_by_round, crawls, rounds, cpus,
         slope, fixed_s = statistics.linear_regression(
             urls, [r.wall_s for r in rounds])
     else:
-        slope, fixed_s = 0.0, statistics.fmean(r.wall_s for r in rounds)
+        # one round size (mega_round): no intercept can be fitted, so the
+        # whole round counts as per-url cost
+        slope = statistics.fmean(r.wall_s for r in rounds) / urls[0]
+        fixed_s = 0.0
     links = sum(r.links for r in rounds) or 1
     first = crawls[0].rounds
     wall_total = sum(r.wall_s for r in rounds)
@@ -374,45 +344,43 @@ def _run(args, work, traced, cpus, spark_version) -> int:
     gen_s = time.perf_counter() - t0
 
     # ---- set-up: session, warm-up crawl, engine construction -----------
-    # The first sample runs from process start (interpreter, JVM launch) and
-    # its warm-up crawl runs one round to get past the cold JIT; the later
-    # samples repeat session, warm-up seed and re-open, and engine
-    # construction in the running process.
-    setup = []
-    for i in range(SETUP_SAMPLES):
-        t0 = time.perf_counter()
-        spark = get_spark(f"perfbench-{wl.name}", cpus=cpus)
-        W.crawl(spark, wl, wl.mini_cfg, mini_inp, os.path.join(work, "warm"),
-                max_rounds=1 if i == 0 else 0)
-        W.open_engine(spark, wl.cfg, inp, os.path.join(work, "ready"))
-        took = time.perf_counter() - t0
-        setup.append(took + (t0 - T_START - gen_s if i == 0 else 0.0))
+    # One cold sample from process start (interpreter, imports, JVM launch)
+    # to an engine ready on the measured corpus, input generation excluded.
+    # The warm-up seeds a small corpus and runs one round on the same code
+    # path, which takes the cold JIT out of the measured crawls.
+    spark = get_spark(f"perfbench-{wl.name}", cpus=cpus)
+    W.crawl(spark, wl, wl.mini_cfg, mini_inp, os.path.join(work, "warm"),
+            max_rounds=1)
+    W.open_engine(spark, wl.cfg, inp, os.path.join(work, "ready"))
+    setup_s = time.perf_counter() - T_START - gen_s
 
     # ---- measured crawls -------------------------------------------------
+    # A fixed number of whole crawls per run, from --seconds and the
+    # workload's nominal crawl time, so every run does the same work.
     tracer = None
     if traced:
         from tracing import Tracer
         tracer = Tracer(spark)
         tracer.install()
-    crawls, engines, errors = [], [], []
-    spent = 0.0
+    crawls, engines, errors, seed_s = [], [], [], []
+    n_crawls = max(1, int(args.seconds // wl.crawl_s))
     try:
-        # whole crawls only: another starts if it should end in the window
-        while (not crawls
-               or spent * (len(crawls) + 1) / len(crawls) <= args.seconds):
+        for i in range(n_crawls):
             if tracer:
-                tracer.crawl_id = len(crawls)
-            t0 = time.perf_counter()
+                tracer.crawl_id = i
             try:
                 rec, eng = W.crawl(spark, wl, wl.cfg, inp,
-                                   os.path.join(work, f"store-{len(crawls)}"),
+                                   os.path.join(work, f"store-{i}"),
                                    hooks=tracer)
             except Exception:
                 errors.append(traceback.format_exc(limit=5))
                 break
-            spent += time.perf_counter() - t0
             crawls.append(rec)
             engines.append(eng)
+            seed_s.append(rec.seed_s)
+        while crawls and len(seed_s) < SEED_SAMPLES:
+            seed_s.append(W.seed_sample(
+                spark, wl, inp, os.path.join(work, f"seed-{len(seed_s)}")))
     finally:
         if tracer:
             tracer.uninstall()
@@ -439,7 +407,8 @@ def _run(args, work, traced, cpus, spark_version) -> int:
         },
         "input_generation_s": gen_s,
         "checks_s": time.perf_counter() - t_checks,
-        "setup_samples_s": setup,
+        "setup_s": setup_s,
+        "seed_samples_s": seed_s,
         "crawls": [{"seed_s": c.seed_s, "crawl_s": c.crawl_s,
                     "resume_s": c.resume_s, "urls": c.urls,
                     "rounds": [[r.fetched, r.links, r.wall_s]
@@ -468,12 +437,13 @@ def _run(args, work, traced, cpus, spark_version) -> int:
                 failed += 1
                 errors.append(replay_error)
         else:
-            metrics, detail["summaries"] = e2e_metrics(crawls, rounds, setup,
-                                                       rss_mb)
+            metrics, detail["summaries"] = e2e_metrics(
+                crawls, rounds, setup_s, seed_s, rss_mb)
     if spark is not None:
         stop_spark(spark)
 
-    units = LAYER_UNITS if traced else E2E_UNITS
+    e2e_units, layer_units = declared_units()
+    units = layer_units if traced else e2e_units
     missing = sorted(set(units) - set(metrics))
     if missing and not errors:
         errors.append(f"metrics not produced: {missing}")

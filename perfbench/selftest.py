@@ -1,6 +1,6 @@
 """Self-test: a miniature of every workload, untraced and traced, checked
-against BENCHMARK.json — every metric is present with its declared unit and
-the run reports correct outputs.
+against BENCHMARK.json — every declared metric is present and the run
+reports correct outputs.
 
     python3 perfbench/run.py --selftest
 """
@@ -37,17 +37,12 @@ def main(root: str) -> int:
                 problems.append(f"{tag}: result keys {sorted(result)}")
             if not result["correct"] or result["failed"]:
                 problems.append(f"{tag}: outputs not correct")
-            got = result["metrics"]
-            for m in declared:
-                if m["name"] not in got:
-                    problems.append(f"{tag}: metric {m['name']} missing")
-                elif got[m["name"]]["unit"] != m["unit"]:
-                    problems.append(f"{tag}: {m['name']} unit "
-                                    f"{got[m['name']]['unit']} != {m['unit']}")
-            extra = set(got) - {m["name"] for m in declared}
-            if extra:
-                problems.append(f"{tag}: undeclared metrics {sorted(extra)}")
-            print(f"selftest {tag}: {len(got)} metrics", flush=True)
+            missing = [m["name"] for m in declared
+                       if m["name"] not in result["metrics"]]
+            if missing:
+                problems.append(f"{tag}: metrics missing {missing}")
+            print(f"selftest {tag}: {len(result['metrics'])} metrics",
+                  flush=True)
     for p in problems:
         print("FAIL", p)
     print("selftest", "failed" if problems else "passed")

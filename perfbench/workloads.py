@@ -16,6 +16,8 @@ import time
 from collections import Counter
 from dataclasses import dataclass, field
 
+import pandas as pd
+
 from abot_dotnet_core_spark.config import CrawlConfig
 from abot_dotnet_core_spark.crawler import CrawlEngine
 from abot_dotnet_core_spark.kernel.robots import parse_robots
@@ -37,22 +39,29 @@ class Workload:
     mini: CorpusSpec            # warm-up corpus crawled during set-up
     cfg: CrawlConfig
     mini_cfg: CrawlConfig
-    seeding: str                # "seed" (one home) | "frontier" (every url)
+    seeding: str                # "seed" (one home) | "frontier" (all urls)
     interrupt_after: int        # rounds before the engine is re-opened
     check: str                  # "order" | "fetched_set"
+    crawl_s: float              # nominal crawl time on a 4-core VM: a run
+                                # of --seconds S measures S // crawl_s crawls
 
 
 # drip_chain: one seed; every page links to the next domain's home, so the
 # crawl walks a chain of small rounds whose wall time is per-round fixed cost.
+# Rounds grow 1, 5, 21, then 40 pages (one domain's tree spread over four
+# rounds); the page cap ends the crawl after 8 rounds, the last of which
+# runs the seen compaction (every seen_compact_every=8 rounds).
 _DRIP_CFG = CrawlConfig(
-    max_pages_to_crawl=60,
+    max_pages_to_crawl=220,
     is_respect_robots_dot_text_enabled=True,
     is_external_page_crawling_enabled=True,
     is_external_page_links_crawling_enabled=True)
 
-# mega_round: every corpus url seeded into round 1, fat pages. The fetch
-# threshold sits below the corpus size so the heavy round takes the Bloom
-# scan-pushdown fetch and mapInArrow extraction; the tail round stays small.
+# mega_round: every url the reference crawl reaches (the corpus plus a few
+# dangling link targets) seeded into round 1, fat pages, so the crawl is one
+# round whose links are all already seen. The fetch threshold sits below the
+# corpus size so the round takes the Bloom scan-pushdown fetch and
+# mapInArrow extraction.
 _MEGA_CFG = CrawlConfig(max_pages_to_crawl=0, fetch_broadcast_threshold=1_500)
 
 WORKLOADS = {
@@ -63,15 +72,16 @@ WORKLOADS = {
         mini=CorpusSpec(n_pages=200, n_domains=10, cross_link_rate=1.0,
                         error_rate=0.0),
         cfg=_DRIP_CFG,
-        mini_cfg=_DRIP_CFG,
-        seeding="seed", interrupt_after=2, check="order"),
+        mini_cfg=dataclasses.replace(_DRIP_CFG, max_pages_to_crawl=60),
+        seeding="seed", interrupt_after=4, check="order", crawl_s=30.0),
     "mega_round": Workload(
         name="mega_round",
         spec=CorpusSpec(n_pages=6_000, n_domains=40, body_repeat=32),
         mini=CorpusSpec(n_pages=200, n_domains=4, body_repeat=32),
         cfg=_MEGA_CFG,
         mini_cfg=dataclasses.replace(_MEGA_CFG, fetch_broadcast_threshold=50),
-        seeding="frontier", interrupt_after=1, check="fetched_set"),
+        seeding="frontier", interrupt_after=1, check="fetched_set",
+        crawl_s=10.0),
 }
 
 
@@ -84,7 +94,7 @@ class Inputs:
     spec: CorpusSpec
     corpus_dir: str
     tables: dict               # pandas tables as written
-    oracle: object = None      # CrawlResultState for "order" checks
+    oracle: object = None      # CrawlResultState of the reference crawl
     oracle_s: float = 0.0      # simulator wall time (simulator.crawl_s)
 
     @property
@@ -98,6 +108,10 @@ class Inputs:
     @property
     def robots(self) -> str:
         return os.path.join(self.corpus_dir, "robots.parquet")
+
+    @property
+    def frontier(self) -> str:
+        return os.path.join(self.corpus_dir, "frontier.parquet")
 
 
 def _write(tables: dict, outdir: str) -> None:
@@ -135,10 +149,13 @@ def make_inputs(wl: Workload, spec: CorpusSpec, outdir: str,
     tables = generate_tables(spec, with_edges=False)
     _write(tables, outdir)
     inp = Inputs(spec=spec, corpus_dir=outdir, tables=tables)
-    if with_simulator:
+    if with_simulator or wl.seeding == "frontier":
         t0 = time.perf_counter()
         inp.oracle = simulate(wl, spec, wl.cfg)
         inp.oracle_s = time.perf_counter() - t0
+    if wl.seeding == "frontier":
+        urls = [c.url for c in inp.oracle.crawled if c.url != VIRTUAL_ROOT]
+        pd.DataFrame({"url": urls}).to_parquet(inp.frontier, index=False)
     return inp
 
 
@@ -187,7 +204,16 @@ def seed_engine(spark, wl: Workload, eng: CrawlEngine, inp: Inputs) -> None:
     if wl.seeding == "seed":
         eng.seed([page_url(0, 0)])
     else:
-        eng.seed_from_frontier(spark.read.parquet(inp.corpus).select("url"))
+        eng.seed_from_frontier(spark.read.parquet(inp.frontier))
+
+
+def seed_sample(spark, wl: Workload, inp: Inputs, store: str) -> float:
+    """Seconds of one seed call on a fresh state store."""
+    shutil.rmtree(store, ignore_errors=True)
+    eng = open_engine(spark, wl.cfg, inp, store)
+    t0 = time.perf_counter()
+    seed_engine(spark, wl, eng, inp)
+    return time.perf_counter() - t0
 
 
 def crawl(spark, wl: Workload, cfg: CrawlConfig, inp: Inputs, store: str,
@@ -275,8 +301,9 @@ def check_order(spark, eng: CrawlEngine, sim) -> str | None:
 
 
 def check_fetched_set(spark, eng: CrawlEngine, inp: Inputs) -> str | None:
-    """Every corpus url fetched exactly once; each 200 page's text digest
-    equals the md5 of the golden text."""
+    """Every corpus url fetched exactly once with a response, the dangling
+    frontier urls without one; each 200 page's text digest equals the md5
+    of the golden text."""
     rows = _events(spark, eng, "crawled")
     in_corpus = Counter(r["url"] for r in rows if r["status"] is not None)
     corpus = inp.tables["corpus"]
@@ -284,6 +311,11 @@ def check_fetched_set(spark, eng: CrawlEngine, inp: Inputs) -> str | None:
     if set(in_corpus) != urls or max(in_corpus.values()) != 1:
         return (f"fetched set differs: {len(in_corpus)} fetched vs "
                 f"{len(urls)} corpus urls")
+    dangling = {c.url for c in inp.oracle.crawled} - urls - {VIRTUAL_ROOT}
+    no_response = {r["url"] for r in rows if r["status"] is None}
+    if no_response != dangling or len(rows) != len(urls) + len(dangling):
+        return (f"{len(rows)} crawled events for {len(urls)} corpus and "
+                f"{len(dangling)} dangling urls")
     golden = {u: hashlib.md5(t.encode("utf-8")).hexdigest()
               for u, t in zip(corpus["url"], corpus["text"])}
     ct = dict(zip(inp.tables["corpus_meta"]["url"],
